@@ -36,11 +36,13 @@ EXACT = ("index_bytes_per_token",)
 
 
 def load(set_dir: str) -> dict:
-    """{workload: {seed: {"metrics": {..}, "host": {..}, "digest": str}}}"""
+    """{workload: {seed: {"metrics": {..}, "host": {..}, "digest": str}}}
+    of the untraced runs; traced runs (``.t1.out``) carry per-layer
+    metrics only and are skipped."""
     runs: dict = {}
     for path in sorted(glob.glob(os.path.join(set_dir, "*.out"))):
         m = _NAME.match(os.path.basename(path))
-        if not m:
+        if not m or m["t"] != "0":
             continue
         with open(path) as f:
             lines = [ln.strip() for ln in f if ln.strip()]

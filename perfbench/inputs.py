@@ -11,9 +11,9 @@ Two corpora per run:
   high-frequency keywords, the rest from a 50 k-identifier Zipf vocabulary,
   lognormal lengths (median 80 tokens, clipped to 5..5000). It is served
   and searched.
-* the *ingest* stream — short documents over a 34-term vocabulary (the 30
+* the *ingest* stream — short documents over a 14-term vocabulary (10
   keywords and 4 identifiers). It is built, appended to and compacted.
-  Its vocabulary is narrow on purpose: a tiered merge costs ~10 ms per
+  Its vocabulary is narrow on purpose: a tiered merge costs ~5-10 ms per
   (term, salt) group on a 4-CPU host, so one merge over a 50 k-term
   vocabulary takes minutes (see NOTES.md).
 
@@ -32,6 +32,7 @@ KEYWORDS = ("def return import for if else while class struct fn func let "
             "const static void int select from where join public private "
             "match impl type var range len print true false null").split()
 VOCAB_SIZE = 50_000
+INGEST_KEYWORDS = 10
 INGEST_IDENTS = 4
 
 
@@ -41,31 +42,33 @@ class Sizes:
     base_segments: int = 4
     ingest_docs: int = 600          # initial ingest-index build
     ingest_segments: int = 6        # + 2 appends == 8 L0 -> 1 merge
-    appends: int = 3                # the 2nd trips the merge
+    rounds: int = 4                 # one append each; the 2nd merges
     append_docs: int = 100
-    fresh_reads: int = 12           # LocalSearcher reads after each commit
+    reload_readers: int = 24        # fresh reads after each commit
     hot_ranks: tuple = (30, 1000)   # df-rank window of the hot term pool
     cold_min_rank: int = 4096       # cold pool: df rank >= this, df >= 1
     serve_queries: int = 6000
     batch_size: int = 512
     serve_batches: int = 4
-    spark_searches: int = 8         # first `gate_queries` double as gate
+    spark_searches: int = 12        # first `gate_queries` double as gate
     spark_warmup: int = 1
-    spark_batches: int = 2
+    spark_warm_batch: int = 64      # untimed, before the first round
     gate_queries: int = 3
     ingest_gate_queries: int = 1
 
 
 SMOKE = Sizes(base_docs=600, ingest_docs=120, append_docs=20,
-              fresh_reads=2, hot_ranks=(5, 60), cold_min_rank=200,
+              reload_readers=2, hot_ranks=(5, 60), cold_min_rank=200,
               serve_queries=300, batch_size=32, serve_batches=2,
-              spark_searches=3, spark_warmup=1, spark_batches=2,
+              spark_searches=3, spark_warmup=1, spark_warm_batch=8,
               gate_queries=2, ingest_gate_queries=1)
 
 
-def _tokens(rng, n_docs: int, median_len: float, n_idents: int):
+def _tokens(rng, n_docs: int, median_len: float, n_idents: int,
+            n_keywords: int = len(KEYWORDS)):
     """(token ids per position, per-doc offsets); ids < n_idents are
-    identifiers ``ident_<id>``, ids >= VOCAB_SIZE are keywords."""
+    identifiers ``ident_<id>``, ids >= VOCAB_SIZE are the first
+    ``n_keywords`` keywords."""
     lens = np.clip(rng.lognormal(np.log(median_len), 1.0, n_docs),
                    5, 5000).astype(np.int64)
     total = int(lens.sum())
@@ -74,7 +77,7 @@ def _tokens(rng, n_docs: int, median_len: float, n_idents: int):
     cum /= cum[-1]
     idents = np.minimum(np.searchsorted(cum, rng.random_sample(total)),
                         n_idents - 1)
-    kws = rng.randint(0, len(KEYWORDS), total) + VOCAB_SIZE
+    kws = rng.randint(0, n_keywords, total) + VOCAB_SIZE
     off = np.r_[0, np.cumsum(lens)]
     doc = np.repeat(np.arange(n_docs), lens)
     pos = np.arange(total) - off[doc]
@@ -124,9 +127,10 @@ class Inputs:
     serve_queries: list[str]
     serve_batches: list[list[str]]
     spark_queries: list[str]
-    spark_batches: list[list[str]]
-    fresh_queries: list[list[str]]  # per append commit
+    spark_batches: list[list[str]]  # one per round
+    fresh_queries: list[list[str]]  # per append commit, per reader
     ingest_gate: list[str]
+    spark_warm_batch: list[str]
     hot_pool: int
     cold_pool: int
 
@@ -134,7 +138,8 @@ class Inputs:
         h = hashlib.sha256()
         for part in (self.base_texts, self.ingest_texts, self.serve_warmup,
                      self.serve_queries, self.spark_queries,
-                     self.ingest_gate, *self.serve_batches,
+                     self.ingest_gate, self.spark_warm_batch,
+                     *self.serve_batches,
                      *self.spark_batches, *self.fresh_queries):
             h.update("\x1e".join(part).encode())
             h.update(b"\x1d")
@@ -150,8 +155,8 @@ def make_inputs(seed: int, workload: str, sizes: Sizes) -> Inputs:
     tok, off = _tokens(rng, sizes.base_docs, 80.0, VOCAB_SIZE)
     base_texts = _texts(tok, off)
     itok, ioff = _tokens(rng, sizes.ingest_docs
-                         + sizes.appends * sizes.append_docs, 30.0,
-                         INGEST_IDENTS)
+                         + sizes.rounds * sizes.append_docs, 30.0,
+                         INGEST_IDENTS, INGEST_KEYWORDS)
     ingest_texts = _texts(itok, ioff)
 
     terms, _ = _ranked_terms(tok, off)
@@ -163,7 +168,7 @@ def make_inputs(seed: int, workload: str, sizes: Sizes) -> Inputs:
         # every hot term once, so the measured loop runs on a warm LRU
         warm = [" ".join(hot[i:i + 3]) for i in range(0, len(hot), 3)]
     else:
-        warm = _queries(qrng, pool, sizes.batch_size // 4)
+        warm = _queries(qrng, pool, sizes.batch_size // 16)
     iterms, _ = _ranked_terms(itok, ioff)
     frng = np.random.RandomState([seed, 3])
     return Inputs(
@@ -179,10 +184,11 @@ def make_inputs(seed: int, workload: str, sizes: Sizes) -> Inputs:
         spark_queries=_queries(qrng, pool, sizes.spark_warmup
                                + sizes.spark_searches),
         spark_batches=[_queries(qrng, pool, sizes.batch_size)
-                       for _ in range(sizes.spark_batches)],
-        fresh_queries=[_queries(frng, iterms, sizes.fresh_reads)
-                       for _ in range(sizes.appends)],
+                       for _ in range(sizes.rounds)],
+        fresh_queries=[_queries(frng, iterms, sizes.reload_readers)
+                       for _ in range(sizes.rounds)],
         ingest_gate=_queries(frng, iterms, sizes.ingest_gate_queries),
+        spark_warm_batch=_queries(qrng, pool, sizes.spark_warm_batch),
         hot_pool=len(hot),
         cold_pool=len(cold),
     )

@@ -1,6 +1,6 @@
 """Benchmark of the BM25 engine: one workload, one seed, one JSON result.
 
-    python3 perfbench/run.py --workload serve-hot --seed 1 --seconds 4 \
+    python3 perfbench/run.py --workload serve-hot --seed 1 --seconds 6 \
         --trace 0
 
 Run it from the root of a checkout (the directory holding
@@ -13,14 +13,19 @@ inputs made from ``--seed`` (see inputs.py):
    warm;
 2. the default build (no ``id_col`` -> length layout, block-max pruning)
    of the base corpus (``build_docs_per_s``, ``index_bytes_per_token``);
-3. Spark ``Bm25Index.search`` and ``query.search_batch`` on the base
-   index, in two halves (``spark_search_p50_ms``, ``spark_batch_qps``);
-4. appends into the ingest index; the second one trips tiered compaction
-   (one merge over the index's build segments), and ``LocalSearcher``
-   reads after every commit (``ingest_docs_per_s``, ``fresh_read_p50_ms``);
-5. serving: a spawned replica process runs one client in a closed loop
-   over ``LocalSearcher`` on the base index, in short bursts between the
-   other phases while no Spark job runs, ``--seconds`` in all
+3. untimed warm-ups: a spawned replica process opens ``LocalSearcher`` on
+   the base index and warms its term LRU while the first Spark search and
+   a small ``search_batch`` run;
+4. rounds, each one a serving burst, a share of the Spark
+   ``Bm25Index.search`` calls and one ``query.search_batch`` on the base
+   index (``spark_search_p50_ms``, ``spark_batch_qps``), and one append
+   into the ingest index followed by the first read of each of several
+   ``LocalSearcher`` readers, which reloads the manifest and fetches cold
+   (``ingest_docs_per_s``, ``fresh_read_p50_ms``). The second append
+   trips tiered compaction: one merge over the index's build segments;
+5. serving: one client in a closed loop over ``LocalSearcher`` in the
+   replica, in bursts between the other phases while no Spark job runs,
+   ``--seconds`` in all, each burst followed by one ``search_batch``
    (``serve_p50_ms``, ``serve_batch_qps``, ``serve_rss_mb``);
 6. the correctness gate: on a fixed query sample, serving top-k, Spark
    top-k and the DuckDB oracle agree, on the base index and on the ingest
@@ -47,7 +52,6 @@ import time
 import traceback
 
 WORKLOADS = ("serve-hot", "serve-cold")
-SERVE_BURSTS = 5
 
 END_TO_END = {
     "setup_s": "s",
@@ -143,8 +147,8 @@ class Run:
         self.spark_results: list = []
         self.sp: dict[str, list] = {k: [] for k in (
             "lat", "traced", "untraced", "plan", "collect", "jobs", "tasks",
-            "batch_q", "batch_s")}
-        self.n_bursts = 0
+            "batch_qps", "append_s", "fresh", "fresh_on", "fresh_off",
+            "session_s", "warmup_s")}
 
     # -- helpers ----------------------------------------------------------
     def path(self, name: str) -> str:
@@ -197,7 +201,7 @@ class Run:
                        self.path("base.parquet"))
         cuts = [0, sz.ingest_docs] + [sz.ingest_docs + (i + 1)
                                       * sz.append_docs
-                                      for i in range(sz.appends)]
+                                      for i in range(sz.rounds)]
         self.ingest_files = []
         for i, (a, b) in enumerate(zip(cuts, cuts[1:])):
             f = self.path(f"ingest_{i}.parquet")
@@ -212,6 +216,7 @@ class Run:
         t0 = _clock()
         self.spark = get_spark("perfbench", cpus=cpus())
         self.spark.sparkContext.setLogLevel("ERROR")
+        self.sp["session_s"] = [_clock() - t0]
         self.base_df = self.spark.read.parquet(self.path("base.parquet"))
         ingest_df = self.spark.read.parquet(self.ingest_files[0])
         self.ingest = Bm25Index.build(
@@ -257,19 +262,28 @@ class Run:
                 "build.jobs": jobs, "build.tasks": tasks,
                 "build.segments": len(segs), "build.bytes_written": nbytes})
 
-    def spark_queries(self, part: int) -> None:
-        """Half of the Spark query work: part 0 runs the warm-up, the first
-        half of the timed searches and the first batch, part 1 the rest;
-        two halves at different times spread the samples over the run."""
+    def spark_warmup(self) -> None:
+        """Untimed Spark warm-up: the first search of the base index and a
+        small ``search_batch`` (the first batch plan compiles slowly)."""
+        from pg_textsearch_spark.index import query as Q
+        t0 = _clock()
+        for q in self.inp.spark_queries[:self.sizes.spark_warmup]:
+            self.op(lambda: self.base.search(q, k=10).collect())
+        t1 = _clock()
+        self.op(lambda: Q.search_batch(self.base, self.inp.spark_warm_batch,
+                                       k=10).collect())
+        self.sp["warmup_s"] = [t1 - t0, _clock() - t1]
+
+    def spark_round(self, r: int) -> None:
+        """Round ``r`` of the Spark query work: its share of the timed
+        searches and one ``search_batch``. Rounds alternate with serving
+        bursts and appends, so the samples spread over the whole run."""
         from pg_textsearch_spark.index import query as Q
         sz, inp, sc, sp = self.sizes, self.inp, self.spark.sparkContext, \
             self.sp
-        if part == 0:
-            for q in inp.spark_queries[:sz.spark_warmup]:
-                self.op(lambda: self.base.search(q, k=10).collect())
         timed = inp.spark_queries[sz.spark_warmup:]
-        half = (len(timed) + 1) // 2
-        for i in range(half * part, min(len(timed), half * (part + 1))):
+        per = -(-len(timed) // sz.rounds)
+        for i in range(per * r, min(len(timed), per * (r + 1))):
             q = timed[i]
             traced = self.trace and i % 2 == 0
             if self.trace and not traced:
@@ -290,20 +304,19 @@ class Run:
             sp["plan"].append(t1 - t0)
             sp["collect"].append(t2 - t1)
             self.spark_results.append(
-                [(int(r["doc_id"]), float(r["score"])) for r in rows])
+                [(int(row["doc_id"]), float(row["score"])) for row in rows])
             j, t = self.jobs_and_tasks(f"perfbench-q{i}")
             sp["jobs"].append(j)
             sp["tasks"].append(t)
-        for b in inp.spark_batches[part::2]:
-            t0 = _clock()
-            if self.op(lambda: Q.search_batch(self.base, b, k=10)
-                       .collect())[0]:
-                sp["batch_q"].append(len(b))
-                sp["batch_s"].append(_clock() - t0)
-        if part == 0:
-            return
+        b = inp.spark_batches[r]
+        t0 = _clock()
+        if self.op(lambda: Q.search_batch(self.base, b, k=10).collect())[0]:
+            sp["batch_qps"].append(len(b) / (_clock() - t0))
+
+    def spark_result(self) -> None:
+        sp = self.sp
         self.e2e["spark_search_p50_ms"] = _ms_p50(sp["lat"])
-        self.e2e["spark_batch_qps"] = sum(sp["batch_q"]) / sum(sp["batch_s"])
+        self.e2e["spark_batch_qps"] = statistics.median(sp["batch_qps"])
         if self.trace:
             self.layers.update({
                 "query.plan_ms": 1e3 * statistics.mean(sp["plan"]),
@@ -317,39 +330,60 @@ class Run:
         from spans import install_driver
         install_driver(self.tracer)
 
-    def ingest_phase(self) -> None:
+    def open_readers(self) -> None:
+        """The serving replicas of the ingest index whose first read after
+        each commit is a fresh read."""
         from pg_textsearch_spark.index.serve import LocalSearcher
-        sz, inp = self.sizes, self.inp
-        srv = LocalSearcher(self.ingest.path)
-        times, fresh, fresh_on, fresh_off = [], [], [], []
-        for i, f in enumerate(self.ingest_files[1:]):
-            df = self.spark.read.parquet(f)
+        self.readers = [LocalSearcher(self.ingest.path)
+                        for _ in range(self.sizes.reload_readers)]
+        # untimed: the process's first scans of the ingest index
+        for srv, q in zip(self.readers, self.inp.fresh_queries[-1]):
+            self.op(srv.search, q, k=10)
+
+    def append_round(self, r: int) -> None:
+        """Append micro-batch ``r`` (the one that brings the index to 8 L0
+        segments also runs the tiered merge), then the first read of
+        every reader: each one reloads the manifest, drops its caches and
+        fetches its terms cold. A reader that does not see the commit
+        fails the operation."""
+        sp = self.sp
+        df = self.spark.read.parquet(self.ingest_files[r + 1])
+        t0 = _clock()
+        if not self.op(self.ingest.append, df, "text", "doc_id")[0]:
+            return
+        sp["append_s"].append(_clock() - t0)
+        for j, (srv, q) in enumerate(zip(self.readers,
+                                         self.inp.fresh_queries[r])):
+            traced = (r + j) % 2 == 0
+            if self.trace and not traced:
+                self.tracer.restore()
+            before = srv.manifest
             t0 = _clock()
-            if not self.op(self.ingest.append, df, "text", "doc_id")[0]:
-                continue
-            times.append(_clock() - t0)
-            for j, q in enumerate(inp.fresh_queries[i]):
-                traced = (i + j) % 2 == 0
-                if self.trace and not traced:
-                    self.tracer.restore()
-                t0 = _clock()
-                self.op(srv.search, q, k=10)
-                dt = _clock() - t0
-                if self.trace and not traced:
-                    self.tracer_on()
-                fresh.append(dt)
-                (fresh_on if traced else fresh_off).append(dt)
-        self.e2e["ingest_docs_per_s"] = (len(times) * sz.append_docs
-                                         / sum(times))
-        self.e2e["fresh_read_p50_ms"] = _ms_p50(fresh)
+            ok = self.op(srv.search, q, k=10)[0]
+            dt = _clock() - t0
+            if self.trace and not traced:
+                self.tracer_on()
+            if ok and srv.manifest is before:
+                self.failed += 1
+                print(f"# fresh read missed commit {r}", file=sys.stderr)
+            elif ok:
+                sp["fresh"].append(dt)
+                sp["fresh_on" if traced else "fresh_off"].append(dt)
+
+    def ingest_result(self) -> None:
+        sp = self.sp
+        self.e2e["ingest_docs_per_s"] = (len(sp["append_s"])
+                                         * self.sizes.append_docs
+                                         / sum(sp["append_s"]))
+        self.e2e["fresh_read_p50_ms"] = _ms_p50(sp["fresh"])
         self.ingest_spark = [
             [(int(r["doc_id"]), float(r["score"])) for r in
              self.ingest.search(q, k=10).collect()]
-            for q in inp.ingest_gate]
+            for q in self.inp.ingest_gate]
         if self.trace:
             self.layers["trace.fresh_read_p50_overhead_ms"] = (
-                _ms_p50(fresh_on) - _ms_p50(fresh_off))
-            self.driver_layers(times)
+                _ms_p50(sp["fresh_on"]) - _ms_p50(sp["fresh_off"]))
+            self.driver_layers(sp["append_s"])
 
     def driver_layers(self, append_times) -> None:
         tr = self.tracer
@@ -422,21 +456,25 @@ class Run:
                 proc.kill()
                 proc.wait()
 
-    def serve_burst(self) -> None:
-        """One serving burst in the replica process (opened on the base
-        index at the first call); see serve_load.py for why bursts."""
+    def open_replica(self) -> None:
+        """Open the replica on the base index and warm its term LRU, in
+        the background while the (untimed) Spark warm-up runs."""
         import serve_load
-        if self.n_bursts == 0:
-            inp = self.inp
-            trace_path = (os.path.join(self.trace_dir, self.tag)
-                          if self.trace else None)
-            self.preloaded.result()
-            self.replica.submit(serve_load.open_replica, self.base.path,
-                                inp.serve_warmup, inp.serve_queries,
-                                inp.serve_batches, trace_path).result()
-        self.n_bursts += 1
-        self.replica.submit(serve_load.burst,
-                            0.75 * self.seconds / SERVE_BURSTS).result()
+        inp = self.inp
+        trace_path = (os.path.join(self.trace_dir, self.tag)
+                      if self.trace else None)
+        self.preloaded.result()
+        self.opened = self.replica.submit(
+            serve_load.open_replica, self.base.path, inp.serve_warmup,
+            inp.serve_queries, inp.serve_batches, trace_path)
+
+    def serve_burst(self) -> None:
+        """One serving burst in the replica process; ``--seconds`` is
+        split evenly over the bursts (see serve_load.py for why)."""
+        import serve_load
+        self.opened.result()
+        self.replica.submit(serve_load.burst, self.seconds
+                            / (self.sizes.rounds + 1)).result()
 
     def serve_result(self) -> None:
         import serve_load
@@ -450,8 +488,11 @@ class Run:
             "serve_batch_qps": (sum(n for n, _ in batches)
                                 / sum(t for _, t in batches)),
             "serve_rss_mb": out["rss_mb"]})
+        cuts = out["bursts"] + [len(lat)]
         print(f"# serve samples={len(lat)} batches={len(batches)} "
-              f"warm_terms={out['warm_terms']}", flush=True)
+              f"warm_terms={out['warm_terms']} burst_p50_ms="
+              + json.dumps([round(_ms_p50(lat[a:b]), 4)
+                            for a, b in zip(cuts, cuts[1:])]), flush=True)
         if self.trace:
             self.layers.update(out["layers"])
             off = out["lat_untraced"]
@@ -533,26 +574,33 @@ class Run:
         self.host_control()
         phase(self.setup)
         phase(self.build_base)
-        phase(self.serve_burst)
-        self.host_control()
-        phase(lambda: self.spark_queries(0), "spark_queries_0")
-        phase(self.serve_burst)
-        phase(self.ingest_phase)
-        phase(self.serve_burst)
-        phase(lambda: self.spark_queries(1), "spark_queries_1")
+        phase(self.open_replica)
+        phase(self.spark_warmup)
+        phase(self.open_readers)
+        for r in range(self.sizes.rounds):
+            phase(self.serve_burst)
+            phase(lambda: self.spark_round(r), "spark_rounds")
+            phase(lambda: self.append_round(r), "append_rounds")
+            if r % 2:
+                self.host_control()
+        phase(self.spark_result)
+        phase(self.ingest_result)
         if self.trace:
             phase(self.spark_extras)
             self.tracer.restore()
             self.tracer.dump(os.path.join(self.trace_dir,
                                           self.tag + ".driver.jsonl"))
-        self.host_control()
         phase(self.stop_spark)
         self.spark = None
-        phase(self.serve_burst)
         phase(self.gate)
         phase(self.serve_burst)
         self.host_control()
         phase(self.serve_result)
+        # per-operation samples, for reading a run's noise
+        print("# ops " + json.dumps({
+            k: [round(x, 4) for x in self.sp[k]] for k in (
+                "session_s", "warmup_s", "lat", "batch_qps", "append_s",
+                "fresh")}), flush=True)
         print("# phases " + json.dumps(phases), flush=True)
         self.layers["host.cpu_control_ms"] = statistics.median(self.control)
         self.layers["host.steal_ticks"] = steal_ticks() - steal0

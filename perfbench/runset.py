@@ -1,12 +1,13 @@
 """Run a set of benchmark runs and keep each run's full output.
 
-    python3 perfbench/runset.py OUT_DIR --seeds 1-10 \
-        [--workloads serve-hot,serve-cold] [--trace 0] [--seconds N]
+    python3 perfbench/runset.py OUT_DIR --seeds 1-10 [--trace 0]
 
 Runs ``perfbench/run.py`` once per (seed, workload), one at a time, from
 the current directory (a checkout root), alternating the workload order
-from seed to seed. Each run's stdout lands in
-``OUT_DIR/<workload>.s<seed>.t<trace>.out``; ``compare.py`` reads them.
+from seed to seed. The workloads and the run length are always those of
+BENCHMARK.json, so two sets measure the same thing. Each run's stdout
+lands in ``OUT_DIR/<workload>.s<seed>.t<trace>.out``; ``compare.py``
+reads them.
 """
 
 from __future__ import annotations
@@ -35,13 +36,10 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("out")
     ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--workloads",
-                    default=",".join(w["name"] for w in bench["workloads"]))
     ap.add_argument("--trace", type=int, default=0)
-    ap.add_argument("--seconds", type=int, default=bench["run_seconds"])
     args = ap.parse_args()
     os.makedirs(args.out, exist_ok=True)
-    workloads = args.workloads.split(",")
+    workloads = [w["name"] for w in bench["workloads"]]
     for i, seed in enumerate(_seeds(args.seeds)):
         for w in (workloads if i % 2 == 0 else workloads[::-1]):
             path = os.path.join(args.out, f"{w}.s{seed}.t{args.trace}.out")
@@ -50,7 +48,7 @@ def main() -> int:
                 rc = subprocess.call(
                     [sys.executable, os.path.join(HERE, "run.py"),
                      "--workload", w, "--seed", str(seed),
-                     "--seconds", str(args.seconds),
+                     "--seconds", str(bench["run_seconds"]),
                      "--trace", str(args.trace)], stdout=out, stderr=err)
             print(f"{w} seed={seed} rc={rc} wall={time.time() - t0:.1f}s",
                   flush=True)

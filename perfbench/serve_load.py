@@ -37,6 +37,7 @@ class Replica:
         self.queries, self.batches = queries, batches
         self.trace_path = trace_path
         self.lat, self.lat_untraced, self.done = [], [], []
+        self.bursts: list[int] = []     # index into ``lat`` of each burst
         self.i = self.b = 0
         self.s = LocalSearcher(index_path)
         self.tracer = self.tr_batch = self.tr_warm = None
@@ -74,6 +75,7 @@ class Replica:
 
     def burst(self, seconds: float) -> None:
         """Single queries for ``seconds``, then one fixed-size batch."""
+        self.bursts.append(len(self.lat))
         if self.tracer is None:
             self._loop(seconds, self.lat)
         else:
@@ -88,7 +90,7 @@ class Replica:
         self.done.append((len(b), _clock() - t0))
 
     def result(self) -> dict:
-        out = {"lat": self.lat, "batches": self.done,
+        out = {"lat": self.lat, "batches": self.done, "bursts": self.bursts,
                "warm_terms": self.warm_terms,
                "rss_mb": resource.getrusage(
                    resource.RUSAGE_SELF).ru_maxrss / 1024.0}
